@@ -328,6 +328,7 @@ def read_snapshot(
     version: int | None = None,
     where: dict[str, tuple] | None = None,
     doc: dict | None = None,
+    bucket_col: str | None = None,
 ) -> DataFrame | None:
     """DataFrame over the latest committed snapshot (optionally pruned
     to ``buckets`` — manifest-metadata skipping, no file listing of
@@ -350,7 +351,14 @@ def read_snapshot(
     ``stats_cols``): directories whose range provably misses every
     requested range are never listed or read — metadata pruning is a
     NECESSARY filter, not sufficient, so apply the real predicate to
-    the returned frame too (exactly the lakehouse contract)."""
+    the returned frame too (exactly the lakehouse contract).
+
+    ``bucket_col`` appends each row's bucket id as an int column of that
+    name, parsed from its file's ``<bucket_col>=<B>`` directory: the id
+    is directory-encoded, never stored in the files, and a read of leaf
+    directories gives Spark no partition root to infer it from. The
+    whole snapshot stays ONE relation (one scan, one file listing)
+    instead of a union of per-entry reads tagged with literals."""
     # ``doc`` lets a caller that already resolved the snapshot (every
     # sink epoch does, for the bucketing record) skip a second
     # manifest list+parse — the manifest grows with epoch count, so
@@ -379,14 +387,26 @@ def read_snapshot(
         if v > 0 and schema is not None:
             from pyspark.sql.types import StructType
 
-            return spark.createDataFrame([], StructType.fromJson(schema))
+            empty = spark.createDataFrame([], StructType.fromJson(schema))
+            if bucket_col is not None:
+                empty = empty.withColumn(bucket_col, F.lit(None).cast("int"))
+            return empty
         return None
     reader = spark.read
     if schema is not None:
         from pyspark.sql.types import StructType
 
         reader = reader.schema(StructType.fromJson(schema))
-    return reader.parquet(*paths)
+    df = reader.parquet(*paths)
+    if bucket_col is not None:
+        # on the scan itself: ``_metadata`` only resolves on the relation
+        df = df.withColumn(
+            bucket_col,
+            F.regexp_extract(
+                F.col("_metadata.file_path"), rf"/{bucket_col}=(\d+)/[^/]+$", 1
+            ).cast("int"),
+        )
+    return df
 
 
 def changed_entries(
@@ -590,8 +610,8 @@ def compact_snapshot(spark: SparkSession, table_path: str) -> int:
 
     This is the maintenance pass ``o_compaction_plan`` plans, wired to
     the table format: OPTIMIZE on Delta, rewrite_data_files on
-    Iceberg. One Spark job: the multi-directory buckets' scans union
-    (each tagged with its manifest bucket id — partition ids are
+    Iceberg. One Spark job: one scan of the multi-directory buckets
+    (bucket id parsed from each file's directory — partition ids are
     directory-encoded, not stored in the files), hash-repartition on
     the bucket id so each bucket lands in one task, one partitioned
     write. Old directories are left for :func:`vacuum` (keeping them
@@ -600,8 +620,6 @@ def compact_snapshot(spark: SparkSession, table_path: str) -> int:
     vacuumed. Single-writer maintenance op: a lost commit race raises,
     like the sink."""
     from uuid import uuid4
-
-    from pyspark.sql import functions as F
 
     doc = resolve_snapshot_doc(spark, table_path)
     version, entries, schema = doc["version"], doc["entries"], doc.get("schema")
@@ -612,28 +630,16 @@ def compact_snapshot(spark: SparkSession, table_path: str) -> int:
     if not multi:
         return version
     keep = [e for e in entries if e["bucket"] not in multi]
-    reader = spark.read
-    if schema is not None:
-        from pyspark.sql.types import StructType
-
-        # schema-pinned reads: pre-evolution files align to the full
-        # committed schema (nulls), so the compacted files carry every
-        # column and the union below never sees drift
-        reader = reader.schema(StructType.fromJson(schema))
-    parts = [
-        reader.parquet(f"{table_path}/{e['path']}").withColumn(
-            "__kb", F.lit(e["bucket"])
-        )
-        for e in entries
-        if e["bucket"] in multi
-    ]
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    compact_rel = f"data/compact-{version + 1:012d}-{uuid4().hex[:8]}"
-    merged.repartition(len(multi), "__kb").write.partitionBy("__kb").parquet(
-        f"{table_path}/{compact_rel}"
+    # one schema-pinned read of the multi-directory buckets:
+    # pre-evolution files align to the full committed schema (nulls),
+    # so the compacted files carry every column
+    merged = read_snapshot(
+        spark, table_path, buckets=sorted(multi), doc=doc, bucket_col=BUCKET_COL
     )
+    compact_rel = f"data/compact-{version + 1:012d}-{uuid4().hex[:8]}"
+    merged.repartition(len(multi), BUCKET_COL).write.partitionBy(
+        BUCKET_COL
+    ).parquet(f"{table_path}/{compact_rel}")
     # the compacted bucket's data-skipping stats are the EXACT merge
     # of its source entries' stats (lo = min of los, hi = max of his)
     # — pure metadata, no data rescan. A column is carried only when

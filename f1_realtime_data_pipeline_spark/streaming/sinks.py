@@ -449,7 +449,7 @@ def transactional_parquet_sink(
     costs grow with ACCUMULATED HISTORY by design — the manifest-dir
     listing (one file per retained commit), the entries list carried
     into every resolve/commit (one entry per epoch × touched bucket),
-    and the idempotence anti-join (unions every live epoch directory
+    and the idempotence anti-join (reads every live epoch directory
     of the batch's buckets). ``keep_history=K`` runs
     ``expire_history(keep_last=K)`` after each commit, bounding the
     listing; ``compact_every=M`` additionally runs
@@ -828,25 +828,21 @@ def transactional_merge(
             side_up = _align_to_schema(
                 up, fields, carry=[_BUCKET_COL]
             ).withColumn("__src", F.lit(1))
+            both = side_up
             if affected:
-                from pyspark.sql.types import StructType
-
-                reader = spark.read
-                if prev_schema is not None:
-                    reader = reader.schema(StructType.fromJson(prev_schema))
-                parts = [
-                    _align_to_schema(
-                        reader.parquet(f"{sink_path}/{e['path']}"), fields
-                    )
+                # one relation over the touched buckets, pinned to the
+                # base schema (the probed one on a pre-tracking table)
+                base = manifest.read_snapshot(
+                    spark,
+                    sink_path,
+                    buckets=sorted(touched),
+                    doc={**snap_doc, "schema": prev_schema},
+                    bucket_col=_BUCKET_COL,
+                )
+                both = both.unionByName(
+                    _align_to_schema(base, fields, carry=[_BUCKET_COL])
                     .withColumn("__src", F.lit(0))
-                    .withColumn(_BUCKET_COL, F.lit(e["bucket"]))
-                    for e in affected
-                ]
-                both = side_up
-                for p in parts:
-                    both = both.unionByName(p)
-            else:
-                both = side_up
+                )
             # updates beat base; within a side the explicit order
             # decides — one fused exchange dedups AND clusters (r17)
             merged = _dedup_clustered(
@@ -957,20 +953,13 @@ def transactional_delete(
             if not affected:
                 return version, False
             keep = [e for e in entries if e["bucket"] not in touched]
-            from pyspark.sql.types import StructType
-
-            reader = spark.read
-            if schema is not None:
-                reader = reader.schema(StructType.fromJson(schema))
-            parts = [
-                reader.parquet(f"{sink_path}/{e['path']}").withColumn(
-                    _BUCKET_COL, F.lit(e["bucket"])
-                )
-                for e in affected
-            ]
-            base = parts[0]
-            for p in parts[1:]:
-                base = base.unionByName(p)
+            base = manifest.read_snapshot(
+                spark,
+                sink_path,
+                buckets=sorted(touched),
+                doc=snap_doc,
+                bucket_col=_BUCKET_COL,
+            )
             # no forced broadcast: erase_results can legitimately pass
             # an arbitrarily large key set (every row of many drivers)
             # — let AQE pick broadcast only when the set is actually
@@ -1156,17 +1145,15 @@ def transactional_agg_sink(
             affected = [e for e in entries if e["bucket"] in touched]
             both = partial
             if affected:
-                from pyspark.sql.types import StructType
-
-                reader = spark.read
-                if doc.get("schema") is not None:
-                    reader = reader.schema(StructType.fromJson(doc["schema"]))
-                for e in affected:
-                    both = both.unionByName(
-                        reader.parquet(f"{sink_path}/{e['path']}").withColumn(
-                            _BUCKET_COL, F.lit(e["bucket"])
-                        )
+                both = both.unionByName(
+                    manifest.read_snapshot(
+                        spark,
+                        sink_path,
+                        buckets=sorted(touched),
+                        doc=doc,
+                        bucket_col=_BUCKET_COL,
                     )
+                )
             # repartition on the bucket column FIRST: hashpartitioning
             # on _BUCKET_COL (a function of the group key) satisfies
             # the merge aggregate's clustered distribution on

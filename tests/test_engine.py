@@ -491,6 +491,25 @@ def test_env_size_string_accepts_spark_byte_grammar():
             _env_size_string(var, bad)
 
 
+def test_session_defaults_are_sized_from_the_host(monkeypatch, tmp_path):
+    # without SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM the session runs
+    # on the CPUs this process may use, with half the memory it may use
+    import os
+
+    from f1_realtime_data_pipeline_spark import session
+
+    assert session.host_cpus() == len(os.sched_getaffinity(0))
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    half_phys = f"{(phys // 2) >> 20}m"
+    cgroup = tmp_path / "memory.max"
+    monkeypatch.setattr(session, "_CGROUP_MEMORY_MAX", str(cgroup))
+    assert session.host_driver_mem() == half_phys  # no cgroup file
+    cgroup.write_text("max\n")
+    assert session.host_driver_mem() == half_phys  # cgroup without a limit
+    cgroup.write_text(f"{2 << 30}\n")
+    assert session.host_driver_mem() == "1024m"  # the container's limit wins
+
+
 def test_env_empty_string_override_is_rejected_not_ignored(monkeypatch):
     # ADVICE r10 (session.py): SPARK_GRAFT_CPUS='' used to fall back to
     # the default via truthiness gating — an exported-but-empty override
@@ -508,6 +527,10 @@ def test_env_empty_string_override_is_rejected_not_ignored(monkeypatch):
     with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE_PARTITIONS"):
         get_spark("empty-env-probe", cpus=8)
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
+        get_spark("empty-env-probe", cpus=8, shuffle_partitions=8)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
     monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", "")
     with pytest.raises(ValueError, match="SPARK_GRAFT_MAX_PARTITION_BYTES"):
         get_spark("empty-env-probe", cpus=8, shuffle_partitions=8)

@@ -3,8 +3,8 @@
 The correctness sweeps so far perturbed the DATA (r8: degenerate
 values; r9: empty relations, unicode corpus). This tool perturbs the
 PHYSICAL EXECUTION LAYOUT while holding the data fixed — exactly the
-axis that changes between this harness (local[32], 32 shuffle
-partitions, AQE on, 128 MB splits) and a 1000-executor deployment
+axis that changes between this harness (local[<host CPUs>], max(CPUs, 8)
+shuffle partitions, AQE on, 128 MB splits) and a 1000-executor deployment
 (thousands of shuffle partitions, site-specific AQE policy, different
 split sizing). Every registered query's values must be bit-identical
 to the DuckDB oracle under EVERY layout; a query whose result depends
@@ -25,7 +25,7 @@ new JVM; env knobs are read by ``session.get_spark``:
                coalesce/skew re-plan; plans must not RELY on AQE
 - split1m    : spark.sql.files.maxPartitionBytes=1m — every scan
                fans out into many small input splits
-- mem4g      : spark.driver.memory=4g (vs the harness's 48g) — the
+- mem4g      : spark.driver.memory=4g (vs half the host's memory) — the
                per-executor-memory-is-small regime; execution must
                spill, not OOM, when the working set outgrows RAM
 
